@@ -12,27 +12,88 @@ per-table PKs, insert modes, migrate-all-tables-when-unset.
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from datetime import timezone
+from typing import TYPE_CHECKING
 
-import pandas as pd
+import pyarrow as pa
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from d2d_spark.operators.join import dedup_build_side, key_merge
-from d2d_spark.sources.base import Sink, Source
+
+if TYPE_CHECKING:
+    # type-only: the format_data kernel's Python workers import this
+    # module, and the sources package loads every connector (and pandas)
+    from d2d_spark.sources.base import Sink, Source
 
 RowFn = Callable[[dict], dict | None]
 
+_ON_ERROR = ("raise", "skip", "quarantine")
 
-def _infer_transform_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str):
+
+def _plain(value, t: pa.DataType):
+    """``value`` of Arrow type ``t`` with maps as dicts and zoned
+    timestamps as naive UTC datetimes, at any depth."""
+    if value is None:
+        return None
+    if pa.types.is_map(t):
+        return {k: _plain(v, t.item_type) for k, v in value}
+    if pa.types.is_struct(t):
+        return {f.name: _plain(value[f.name], f.type) for f in t}
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return [_plain(v, t.value_type) for v in value]
+    if pa.types.is_timestamp(t) and t.tz:
+        return value.astimezone(timezone.utc).replace(tzinfo=None)
+    return value
+
+
+def _needs_plain(t: pa.DataType) -> bool:
+    """Whether ``to_pylist`` values of type ``t`` need ``_plain``."""
+    if pa.types.is_map(t) or (pa.types.is_timestamp(t) and t.tz):
+        return True
+    if pa.types.is_struct(t):
+        return any(_needs_plain(f.type) for f in t)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return _needs_plain(t.value_type)
+    return False
+
+
+def _values(col: pa.Array | pa.ChunkedArray) -> list:
+    """One column as the Python values ``_row_dicts`` promises."""
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or (
+        col.null_count == 0
+        and (pa.types.is_integer(t) or pa.types.is_floating(t) or pa.types.is_boolean(t))
+    ):
+        # the values to_pylist gives, several times faster
+        return col.to_numpy(zero_copy_only=False).tolist()
+    values = col.to_pylist()
+    return [_plain(v, t) for v in values] if _needs_plain(t) else values
+
+
+def _row_dicts(batch: pa.RecordBatch | pa.Table) -> list[dict]:
+    """The rows ``format_data`` sees, the same on the driver sample and
+    on the executors: nulls are ``None``, arrays lists, maps and structs
+    dicts, timestamps naive UTC datetimes."""
+    names = batch.schema.names
+    return [dict(zip(names, row)) for row in zip(*(_values(c) for c in batch.columns))]
+
+
+def _infer_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str) -> T.StructType:
     """Run ``fn`` over a driver-side sample to infer the output schema
-    (the plan-level analog of the reference's infer-from-first-row).
-    Sample-row failures respect ``on_error`` — under skip/quarantine a
-    row that crashes the transform must not crash inference either."""
-    sample_rows = [r.asDict(recursive=True) for r in df.limit(sample).collect()]
+    (the plan-level analog of the reference's infer-from-first-row):
+    columns are the union of emitted keys in first-seen order, typed by
+    Arrow from their values. Sample-row failures respect ``on_error``
+    — under skip/quarantine a row that crashes the transform must not
+    crash inference either."""
     transformed = []
-    for r in sample_rows:
+    for r in _row_dicts(df.limit(sample).toArrow()):
         try:
             t = fn(r)
         except Exception:
@@ -45,8 +106,10 @@ def _infer_transform_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str
         raise ValueError(
             "format_data dropped or failed every sample row; cannot infer output schema"
         )
-    schema = df.sparkSession.createDataFrame(pd.DataFrame(transformed)).schema
-    return schema, [f.name for f in schema.fields]
+    names = list(dict.fromkeys(k for t in transformed for k in t))
+    return from_arrow_schema(
+        pa.schema([(k, pa.array([t.get(k) for t in transformed]).type) for k in names])
+    )
 
 
 def apply_format_data(
@@ -59,19 +122,32 @@ def apply_format_data(
 
     Expression fast path: a {col: Column} dict becomes withColumns —
     pure Catalyst, codegen, no Python in the hot path. Callable path:
-    the reference's dict->dict contract runs in Arrow-batched
-    mapInPandas; output schema is inferred by running the transform
-    over a driver-side sample, then applied distributed. Returning a
-    falsy value drops the row (:115-117).
+    the reference's dict->dict contract runs in one Arrow-batched
+    ``mapInArrow`` kernel; the output schema is inferred by running the
+    transform over a driver-side sample, then applied distributed.
+    Returning a falsy value drops the row (:115-117); a key the sample
+    never emitted raises.
 
-    ``on_error``: ``'raise'`` is reference parity — failures re-raise
-    carrying the offending row (d22d/task.py:172-180). ``'skip'``
-    drops failing rows (a 100 TB run survives the one malformed
-    record). For an auditable bad-row channel use
-    ``format_data_with_quarantine``.
+    Row dicts (``_row_dicts``) are the same on the driver sample and on
+    the executors: nulls are ``None`` (never ``nan``), arrays are
+    lists, maps and structs are dicts, timestamps are naive UTC
+    datetimes. Emitted naive datetimes are read back as UTC.
+
+    ``on_error`` (``'quarantine'`` needs a callable):
+
+    - ``'raise'`` is reference parity — a failure re-raises carrying
+      the offending row (d22d/task.py:172-180);
+    - ``'skip'`` drops failing rows (a 100 TB run survives the one
+      malformed record);
+    - ``'quarantine'`` returns the kernel's wide frame: the data
+      columns plus ``__row`` (the input row as JSON) and ``__error``,
+      both null on good rows and set on failed ones, whose data columns
+      are null. ``format_data_with_quarantine`` splits it.
     """
-    if on_error not in ("raise", "skip"):
-        raise ValueError(f"on_error must be 'raise' or 'skip', got {on_error!r}")
+    if on_error not in _ON_ERROR:
+        raise ValueError(f"on_error must be one of {_ON_ERROR}, got {on_error!r}")
+    if on_error == "quarantine" and not callable(fn):
+        raise ValueError("on_error='quarantine' needs a callable format_data")
     if fn is None:
         return df
     if isinstance(fn, dict):
@@ -80,115 +156,69 @@ def apply_format_data(
             out = out.withColumn(name, expr)
         return out
 
-    schema, cols = _infer_transform_schema(df, fn, sample, on_error)
-
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                try:
-                    t = fn(rec)
-                except Exception as e:
-                    if on_error == "skip":
-                        continue
-                    # reference parity: failures carry the offending row
-                    # (d22d/task.py:172-180 logs index + payload, re-raises)
-                    raise RuntimeError(f"format_data failed on row {rec!r}") from e
-                if t:
-                    out.append(t)
-            if out:
-                # a key the sample never saw would be silently dropped
-                # by the fixed-column DataFrame below — fail loudly
-                # instead (schema drift is a bug, not a column to lose)
-                extra = set().union(*(t.keys() for t in out)) - set(cols)
-                if extra:
-                    raise ValueError(
-                        f"format_data emitted keys absent from the sampled schema: "
-                        f"{sorted(extra)}; emit them in the first {sample} rows or "
-                        f"raise the sample size"
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in cols}
-            )
-
-    return df.mapInPandas(run, schema=schema)
-
-
-def format_data_with_quarantine(
-    df: DataFrame, fn: RowFn, sample: int = 100, persist: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Per-row transform with an auditable bad-row channel.
-
-    Returns ``(good, bad)``: ``good`` is the transformed frame exactly
-    as ``apply_format_data`` would produce it; ``bad`` has one row per
-    failing input — ``(row_json, error)`` — ready to write to a
-    quarantine table for replay after the transform is fixed.
-
-    Both frames are filters over ONE wide mapInPandas stage, so the
-    transform logic runs once per row per action. A caller consuming
-    both sides should either write them in one pass (``Migration``'s
-    ``quarantine`` mode persists the wide stage around its two writes)
-    or persist the inputs themselves.
-    """
-    import json
-
-    from pyspark.sql import types as T
-
-    schema, cols = _infer_transform_schema(df, fn, sample, on_error="skip")
-    wide_schema = T.StructType(
-        list(schema.fields)
+    schema = _infer_schema(df, fn, sample, on_error)
+    cols = set(schema.names)
+    wide = T.StructType(
+        schema.fields
         + [T.StructField("__row", T.StringType()), T.StructField("__error", T.StringType())]
     )
-    wide_cols = cols + ["__row", "__error"]
+    arrow_wide = to_arrow_schema(wide)
 
-    def run(batches):
-        yielded = False
-        for pdf in batches:
-            good, bad = [], []
-            for rec in pdf.to_dict("records"):
+    def kernel(batches):
+        for batch in batches:
+            out = []
+            for rec in _row_dicts(batch):
                 try:
                     t = fn(rec)
                 except Exception as e:
-                    bad.append(
+                    if on_error == "raise":
+                        raise RuntimeError(f"format_data failed on row {rec!r}") from e
+                    out.append(
                         {
                             "__row": json.dumps(rec, default=str, sort_keys=True),
                             "__error": f"{type(e).__name__}: {e}",
                         }
                     )
                     continue
-                if t:
-                    extra = set(t.keys()) - set(cols)
-                    if extra:
-                        raise ValueError(
-                            f"format_data emitted keys absent from the sampled "
-                            f"schema: {sorted(extra)}"
-                        )
-                    good.append(t)
-            # good and bad rows are SEPARATE frames: one mixed frame
-            # would NaN-fill the data columns of bad rows, coercing
-            # int64 columns to float64 and silently rounding good-row
-            # values above 2^53
-            if good:
-                yielded = True
-                yield pd.DataFrame(good, columns=wide_cols)
-            if bad:
-                yielded = True
-                yield pd.DataFrame(bad, columns=wide_cols, dtype="object")
-        if not yielded:
-            yield pd.DataFrame({c: pd.Series(dtype="object") for c in wide_cols})
+                if not t:
+                    continue
+                if not cols.issuperset(t):
+                    # a key the sample never saw would be silently
+                    # dropped by the fixed output schema — fail loudly
+                    raise ValueError(
+                        f"format_data emitted keys absent from the sampled schema: "
+                        f"{sorted(set(t) - cols)}; emit them in the first {sample} rows "
+                        f"or raise the sample size"
+                    )
+                out.append(t)
+            yield pa.RecordBatch.from_pylist(out, schema=arrow_wide)
 
-    wide = df.mapInPandas(run, schema=wide_schema)
-    if persist:
-        from pyspark import StorageLevel
+    out = df.mapInArrow(kernel, wide)
+    return out if on_error == "quarantine" else _split(out)[0]
 
-        # one materialization feeds both legs; blocks are reclaimed by
-        # the context cleaner once the frames go out of scope
-        wide = wide.persist(StorageLevel.MEMORY_AND_DISK)
+
+def _split(wide: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(good, bad)`` halves of the kernel's wide frame."""
     good = wide.filter(F.col("__error").isNull()).drop("__row", "__error")
     bad = wide.filter(F.col("__error").isNotNull()).select(
         F.col("__row").alias("row_json"), F.col("__error").alias("error")
     )
     return good, bad
+
+
+def format_data_with_quarantine(
+    df: DataFrame, fn: RowFn, sample: int = 100
+) -> tuple[DataFrame, DataFrame]:
+    """Per-row transform with an auditable bad-row channel.
+
+    Returns ``(good, bad)``: ``good`` is the transformed frame exactly
+    as ``apply_format_data`` would produce it; ``bad`` has one row per
+    failing input — ``(row_json, error)`` — ready to write to a
+    quarantine table for replay after the transform is fixed. Both are
+    filters over one wide kernel stage, so a caller consuming both
+    should persist that stage, as ``Migration``'s quarantine mode does.
+    """
+    return _split(apply_format_data(df, fn, sample, on_error="quarantine"))
 
 
 def _split_pks(pks: str | list[str] | None) -> list[str]:
@@ -230,10 +260,8 @@ class Migration:
         on_error: str = "raise",
         quarantine_to: str | None = None,
     ):
-        if on_error not in ("raise", "skip", "quarantine"):
-            raise ValueError(
-                f"on_error must be 'raise', 'skip' or 'quarantine', got {on_error!r}"
-            )
+        if on_error not in _ON_ERROR:
+            raise ValueError(f"on_error must be one of {_ON_ERROR}, got {on_error!r}")
         self.source = database_from
         self.sink = database_to
         self.table_from = table_from
@@ -249,37 +277,42 @@ class Migration:
         self.quarantine_to = quarantine_to
 
     def run_one(self, table_from: str, table_to: str | None = None, pks: list[str] | None = None) -> DataFrame:
-        df = self.source.read(table_from)
-        bad = None
-        if callable(self.format_data) and self.on_error == "quarantine":
-            # bad rows land in `<table>_quarantine` (row_json, error)
-            # for replay; expression (dict) transforms never fail
-            # per-row, so quarantine only applies to the callable path
-            df, bad = format_data_with_quarantine(df, self.format_data, persist=True)
-        else:
-            df = apply_format_data(
-                df, self.format_data, on_error="raise" if self.on_error == "quarantine" else self.on_error
-            )
+        table_to = table_to or table_from
+        pks = pks if pks is not None else self.pks
+        # expression (dict) transforms never fail per-row, so the bad-row
+        # channels only apply to the callable path
+        on_error = self.on_error if callable(self.format_data) else "raise"
+        df = apply_format_data(self.source.read(table_from), self.format_data, on_error=on_error)
+        if on_error != "quarantine":
+            return self._load(df, table_to, pks)
+        # one materialization of the wide frame feeds both writes; it is
+        # released before returning, so a later run over the same path
+        # reads the source afresh
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            good, bad = _split(df)
+            out = self._load(good, table_to, pks)
+            # bad rows land in `<table>_quarantine` (row_json, error) for replay
+            self.sink.write(bad, self.quarantine_to or f"{table_to}_quarantine", mode="append")
+            return out
+        finally:
+            df.unpersist()
+
+    def _load(self, df: DataFrame, table_to: str, pks: list[str]) -> DataFrame:
+        """Dedup, cap and write the transformed rows to ``table_to``."""
         if self.quchong:
             # the reference's in-memory set (OOM-unsafe, README.md:154)
             # becomes a shuffled, spill-safe distinct
             df = df.dropDuplicates()
         if self.size is not None:
             df = df.limit(self.size)
-        pks = pks if pks is not None else self.pks
         self.sink.write(
             df,
-            table_to or table_from,
+            table_to,
             mode=_effective_mode(self.mode, pks),
             pks=pks or None,
             **self.write_kwargs,
         )
-        if bad is not None:
-            self.sink.write(
-                bad,
-                self.quarantine_to or f"{table_to or table_from}_quarantine",
-                mode="append",
-            )
         return df
 
     def run(self) -> list[str]:

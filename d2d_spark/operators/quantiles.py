@@ -87,6 +87,8 @@ def quantiles_exact(
     returns zero rows. Memory is bounded by distinct-values-per-
     partition; no executor ever buffers the value multiset."""
     probs = _check_probs(probs)
+    if num_partitions is not None and num_partitions < 1:
+        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
     v = F.col(value_col)
     from pyspark import StorageLevel
 
@@ -111,8 +113,6 @@ def quantiles_exact(
     # and each recompute the collapse (the standing cold-race lesson);
     # measured best-of-4 2.77 -> 2.53 s at sf0.1 with the fill.
     counts.count()
-    if num_partitions is not None and num_partitions < 1:
-        raise ValueError(f"num_partitions must be >= 1, got {num_partitions}")
     nb = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )

@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    half of physical RAM. A fixed heap larger than the machine lets the
+    JVM die on a native out-of-memory once it grows past what it can
+    commit; the other half is left to the Python workers and the OS."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "d2d_spark",
     master: str | None = None,
@@ -61,7 +73,7 @@ def get_spark(
         # while bounding the pathological case.
         .config("spark.sql.maxPlanStringLength", "8388608")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config(

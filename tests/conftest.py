@@ -17,7 +17,7 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 def spark():
     from d2d_spark.session import get_spark
 
-    s = get_spark("d2d_spark_tests", master="local[8]", shuffle_partitions=8)
+    s = get_spark("d2d_spark_tests", shuffle_partitions=8)
     yield s
 
 

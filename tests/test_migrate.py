@@ -367,3 +367,116 @@ def test_format_data_on_error_validated_for_dict_transforms(spark):
     mem = MemoryConnector({"u": USERS}, spark)
     with pytest.raises(ValueError, match="on_error"):
         apply_format_data(mem.read("u"), {"x": F.col("score")}, on_error="quarantine")
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_quarantine_rerun_reads_replaced_source(spark, tmpdir):
+    """A quarantine run releases its cached wide frame: a second run
+    over the same parquet path, after another writer replaced its
+    files, writes the new rows rather than the cached old ones."""
+    spark.catalog.clearCache()
+    src = ParquetConnector(str(tmpdir / "src"), spark)
+    dst = ParquetConnector(str(tmpdir / "dst"), spark)
+
+    def fmt(d):
+        if d["score"] < 0:
+            raise ValueError("negative score")
+        return {"uid": d["user_id"], "score": d["score"]}
+
+    for rows in ([(1, 10), (2, -1)], [(3, 30), (4, 40), (5, -5)]):
+        shutil.rmtree(tmpdir / "src", ignore_errors=True)
+        src.write(spark.createDataFrame(rows, "user_id long, score long"), "u", mode="overwrite")
+        Migration(src, dst, table_from="u", format_data=fmt, mode="overwrite",
+                  on_error="quarantine").run()
+        assert _cache_empty(spark)
+    assert {(r.uid, r.score) for r in dst.read("u").collect()} == {(3, 30), (4, 40)}
+    assert sorted(r.row_json for r in dst.read("u_quarantine").collect()) == [
+        '{"score": -1, "user_id": 2}', '{"score": -5, "user_id": 5}',
+    ]
+
+
+def test_quarantine_run_releases_cache_when_it_raises(spark, tmpdir):
+    spark.catalog.clearCache()
+    src = MemoryConnector({"u": [{"id": i} for i in range(150)]}, spark)
+
+    def fmt(d):
+        # a key the default 100-row sample never sees fails the write
+        return {"id": d["id"], **({"late": 1} if d["id"] >= 100 else {})}
+
+    with pytest.raises(Exception, match="absent from the sampled schema"):
+        Migration(src, ParquetConnector(str(tmpdir), spark), table_from="u",
+                  format_data=fmt, mode="overwrite", on_error="quarantine").run()
+    assert _cache_empty(spark)
+
+
+def test_format_data_row_dicts_match_on_driver_and_executors(spark):
+    """``format_data`` sees one row-dict shape on the driver-side sample
+    and on the executors: ``None`` for a null bigint (not ``nan``),
+    lists for arrays, dicts for maps and structs, naive datetimes."""
+    import datetime as dt
+    import json
+
+    from d2d_spark.migrate import format_data_with_quarantine
+
+    ts = dt.datetime(2024, 1, 2, 3, 4, 5)
+    utc = ts.replace(tzinfo=dt.timezone.utc)
+    df = spark.createDataFrame(
+        [(1, None, [1, 2], {"x": 1}, (1, "z"), utc), (2, 7, [], {}, (2, "y"), None),
+         (3, None, None, None, None, utc)],
+        "id long, n long, a array<int>, m map<string,int>, s struct<p:int,q:string>, "
+        "ts timestamp",
+    )
+    on_driver = {}
+
+    def fmt(d):
+        on_driver[d["id"]] = repr(d)  # only the driver's own copy is kept
+        if d["id"] == 3:
+            raise ValueError("row 3")
+        return {"id": d["id"], "seen": repr(d)}
+
+    good, bad = format_data_with_quarantine(df, fmt)
+    on_executors = {r.id: r.seen for r in good.collect()}
+    assert on_executors == {i: on_driver[i] for i in (1, 2)}
+    assert on_executors[1] == (
+        "{'id': 1, 'n': None, 'a': [1, 2], 'm': {'x': 1}, 's': {'p': 1, 'q': 'z'}, "
+        f"'ts': {ts!r}}}"
+    )
+    (row,) = bad.collect()
+    assert json.loads(row.row_json) == {
+        "id": 3, "n": None, "a": None, "m": None, "s": None, "ts": str(ts),
+    }
+
+
+def test_row_dicts_equal_to_pylist_on_flat_columns():
+    """The kernel's fast column conversion gives exactly the values of
+    ``RecordBatch.to_pylist`` wherever no map or zoned timestamp is
+    involved (those two are made dicts and naive datetimes)."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from d2d_spark.migrate import _row_dicts
+
+    batch = pa.RecordBatch.from_pydict({
+        "i64": pa.array([1, -(1 << 62), 3], pa.int64()),
+        "i64_null": pa.array([1, None, 3], pa.int64()),
+        "i8": pa.array([1, 2, -3], pa.int8()),
+        "f64": pa.array([1.5, float("inf"), -0.0]),
+        "f64_null": pa.array([1.5, None, 2.0]),
+        "b": pa.array([True, False, True]),
+        "b_null": pa.array([True, None, False]),
+        "s": pa.array(["a", None, ""]),
+        "ls": pa.array(["x", "y", None], pa.large_string()),
+        "arr": pa.array([[1, None], [], None]),
+        "st": pa.array([{"p": 1}, None, {"p": None}]),
+        "ts_naive": pa.array([dt.datetime(2024, 1, 2), None, dt.datetime(1970, 1, 1)]),
+        "d": pa.array([dt.date(2024, 1, 2), None, dt.date(1, 1, 1)]),
+    })
+    got = _row_dicts(batch)
+    assert got == batch.to_pylist()
+    assert [{k: type(v) for k, v in r.items()} for r in got] == [
+        {k: type(v) for k, v in r.items()} for r in batch.to_pylist()
+    ]

@@ -102,6 +102,22 @@ def test_validation(spark):
         quantiles_exact(df, "x", [0.5], num_partitions=0)
 
 
+def test_invalid_num_partitions_raises_before_any_job(spark):
+    from d2d_spark import cache as opcache
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([(1.0,), (2.0,)], "x double")
+    registered = len(opcache.entries("quantiles"))
+    sc.setJobGroup("quantiles_bad_arg", "invalid num_partitions")
+    try:
+        with pytest.raises(ValueError, match="num_partitions"):
+            quantiles_exact(df, "x", [0.5], num_partitions=0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("quantiles_bad_arg")) == []
+    assert len(opcache.entries("quantiles")) == registered
+
+
 def test_winsorize_global_and_grouped(spark, rnd_values):
     from d2d_spark.operators.quantiles import winsorize
 
