@@ -91,9 +91,13 @@ def _infer_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str) -> T.Str
     columns are the union of emitted keys in first-seen order, typed by
     Arrow from their values. Sample-row failures respect ``on_error``
     — under skip/quarantine a row that crashes the transform must not
-    crash inference either."""
+    crash inference either.
+
+    The sample is the first rows of the first partitions, read by one
+    task: a bare ``limit`` collected as Arrow shuffles every
+    partition's head to one reducer first, an extra stage per call."""
     transformed = []
-    for r in _row_dicts(df.limit(sample).toArrow()):
+    for r in _row_dicts(df.coalesce(1).limit(sample).toArrow()):
         try:
             t = fn(r)
         except Exception:
@@ -287,7 +291,8 @@ class Migration:
             return self._load(df, table_to, pks)
         # one materialization of the wide frame feeds both writes; it is
         # released before returning, so a later run over the same path
-        # reads the source afresh
+        # reads the source afresh; the release blocks until the blocks
+        # are gone, so no clean-up overlaps the caller's next job
         df.persist(StorageLevel.MEMORY_AND_DISK)
         try:
             good, bad = _split(df)
@@ -296,7 +301,7 @@ class Migration:
             self.sink.write(bad, self.quarantine_to or f"{table_to}_quarantine", mode="append")
             return out
         finally:
-            df.unpersist()
+            df.unpersist(blocking=True)
 
     def _load(self, df: DataFrame, table_to: str, pks: list[str]) -> DataFrame:
         """Dedup, cap and write the transformed rows to ``table_to``."""

@@ -480,3 +480,29 @@ def test_row_dicts_equal_to_pylist_on_flat_columns():
     assert [{k: type(v) for k, v in r.items()} for r in got] == [
         {k: type(v) for k, v in r.items()} for r in batch.to_pylist()
     ]
+
+
+def test_schema_sample_reads_first_rows_in_one_stage(spark):
+    """The driver-side sample is one task over the first partitions: no
+    shuffle stage, and the same leading rows on every call."""
+    from d2d_spark.migrate import _infer_schema
+
+    sc = spark.sparkContext
+    df = spark.range(0, 400, numPartitions=4)
+    seen = []
+
+    def fmt(d):
+        seen.append(d["id"])
+        return {"id": d["id"]}
+
+    sc.setJobGroup("format_data_sample", "schema sample")
+    try:
+        for _ in range(2):
+            assert _infer_schema(df, fmt, 10, "raise").names == ["id"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = list(tracker.getJobIdsForGroup("format_data_sample"))
+    assert len(jobs) == 2
+    assert [len(tracker.getJobInfo(j).stageIds) for j in jobs] == [1, 1]
+    assert seen == list(range(10)) * 2
